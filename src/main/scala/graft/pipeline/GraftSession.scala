@@ -41,10 +41,8 @@ object GraftSession {
       // same interleaved window). The fan-out serialization is fixed at
       // the operators themselves instead (explicit spread of the
       // checkpointed gram/pair tables feeding heavy per-row compute —
-      // guide §1.2 order: algorithm before configuration). The env knob
-      // remains for experiments only.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
+      // guide §1.2 order: algorithm before configuration).
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
       // constraintPropagation stays ON (default): an A/B over an
       // 8-query probe showed only ~3% planning-latency win from
       // disabling it, and it would cost the inferred IsNotNull parquet

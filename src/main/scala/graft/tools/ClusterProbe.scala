@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   * executors are tuned (ActiveProcessorCount, adaptive heaps, warm-up,
   * registration gate) the multi-executor topology costs NOTHING —
   * 4 × 4-core executors sustain 0.99× of one JVM with the same 16
-  * threads, and FabricProbe excludes cross-process throttling — so the
+  * threads, and a control experiment (the same allocate-and-touch load
+  * as 1 JVM × 4 threads vs 4 JVMs × 1: ratio 1.012, BASELINE.md
+  * round-2 item 5) excludes cross-process throttling — so the
   * raw single-box N→4N ratio (0.63–0.78) is bounded only by the one
   * socket's concave thread-throughput curve, which 4N separate
   * machines multiply by construction.
@@ -21,42 +23,6 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.tools.ClusterProbe <turnsPath> list 2,8 4"
   */
 object ClusterProbe {
-
-  /** Captured BEFORE any self-pinning — availableProcessors() shrinks to
-    * the affinity mask once the driver is pinned. */
-  private val HostCores = Runtime.getRuntime.availableProcessors()
-
-  /** Optional cpuset-per-executor analog (GRAFT_PIN=1): a java shim
-    * taskset-pins each executor JVM to its own `cores`-wide slice and
-    * the driver to the top slice. Kept as a documented NEGATIVE result:
-    * pinning speeds the lone executor slightly and does not help the
-    * multi-executor case — consistent with the final analysis that the
-    * tuned topology has no cross-process penalty at all (see the class
-    * scaladoc; the historical GC-starvation symptoms disappeared with
-    * ActiveProcessorCount + adaptive heaps + warm-up). */
-  private def writePinShim(cores: Int, slots: Int): String = {
-    val dir = java.nio.file.Paths.get("/tmp/graft-java-shim")
-    java.nio.file.Files.createDirectories(dir.resolve("bin"))
-    val realJava = System.getProperty("java.home")
-    val sh =
-      s"""#!/bin/bash
-         |# taskset-pin executor JVMs to disjoint core slices (cgroup-
-         |# cpuset analog); pass everything else through untouched.
-         |if [[ "$$*" != *CoarseGrainedExecutorBackend* ]]; then
-         |  exec "$realJava/bin/java" "$$@"
-         |fi
-         |d=/tmp/graft-java-shim
-         |n=$$(flock "$$d/lock" bash -c 'c=$$(cat "$$0/ctr" 2>/dev/null || echo 0); echo $$(( (c+1) % $slots )) > "$$0/ctr"; echo $$c' "$$d")
-         |lo=$$(( n * $cores )); hi=$$(( lo + $cores - 1 ))
-         |exec taskset -c $$lo-$$hi "$realJava/bin/java" "$$@"
-         |""".stripMargin
-    val f = dir.resolve("bin/java")
-    java.nio.file.Files.writeString(f, sh)
-    f.toFile.setExecutable(true)
-    java.nio.file.Files.deleteIfExists(dir.resolve("ctr"))
-    java.nio.file.Files.writeString(dir.resolve("lock"), "")
-    dir.toString
-  }
 
   /** local-cluster needs a Spark home for the executor launcher. The
     * driver contract runs Bench without SPARK_HOME/SPARK_SCALA_VERSION
@@ -81,20 +47,9 @@ object ClusterProbe {
   def clusterSession(workers: Int, cores: Int, name: String,
       execMemMb: Int = 8192): SparkSession = {
     val totalCores = workers * cores
-    val hostCores = HostCores
-    val shim = writePinShim(cores, math.max(1, hostCores / cores))
     val sparkHome = ensureSparkHome()
     sys.props("spark.testing") = "true"
     sys.props("spark.test.home") = sparkHome
-    if (sys.env.get("GRAFT_PIN").contains("1")) {
-      // full cpuset isolation: the driver keeps the TOP core slice so
-      // its threads can never ride into (and steal from) the executor
-      // slices the shim assigns from the bottom up
-      val pid = ProcessHandle.current().pid()
-      val lo = hostCores - cores
-      new ProcessBuilder("taskset", "-apc", s"$lo-${hostCores - 1}", pid.toString)
-        .inheritIO().start().waitFor()
-    }
     val s = try SparkSession.builder()
       .master(s"local-cluster[$workers,$cores,${execMemMb + 1024}]")
       .appName(name)
@@ -103,11 +58,8 @@ object ClusterProbe {
       // do NOT inherit sbt's classpath — ship the engine's classes
       .config("spark.executor.extraClassPath",
         sys.props.getOrElse("graft.classdir", "/root/repo/target/scala-2.13/classes"))
-      // optional: route executor launches through the pinning shim
-      // (executors resolve java from their child env's JAVA_HOME)
-      .config("spark.executorEnv.JAVA_HOME",
-        if (sys.env.get("GRAFT_PIN").contains("1")) shim
-        else System.getProperty("java.home"))
+      // executors resolve java from their child env's JAVA_HOME
+      .config("spark.executorEnv.JAVA_HOME", System.getProperty("java.home"))
       // the executor-command builder resolves these from the app env
       .config("spark.executorEnv.SPARK_HOME", sparkHome)
       .config("spark.executorEnv.SPARK_SCALA_VERSION", "2.13")
@@ -172,8 +124,7 @@ object ClusterProbe {
       // this box — adaptive heap growth (fresh-page zeroing must happen
       // OUTSIDE the measured window; it is startup cost, not steady
       // state, exactly as on a long-lived real cluster)
-      val warmups = sys.env.getOrElse("GRAFT_CLUSTER_WARMUPS", "3").toInt
-      for (_ <- 0 until warmups) job()
+      for (_ <- 0 until 3) job()
       var best = Double.MaxValue
       for (_ <- 0 until 2) {
         val t0 = System.nanoTime()
